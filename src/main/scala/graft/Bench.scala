@@ -507,15 +507,7 @@ object Bench {
       require(names.distinct.size == names.size,
         "SPARK_GRAFT_ONLY: duplicate names would emit duplicate JSON keys")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts has shipped as TIMESTAMP(NANOS) and TIMESTAMP_NTZ
-      // across fixture regens; this flag serves the NANOS case and
-      // Tables.normalizeTs handles every known encoding.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // parallelismFirst stays at Spark's DEFAULT (true). The closeout
       // flipped it to false on a "measured neutral" claim; re-measured

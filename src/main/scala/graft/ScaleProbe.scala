@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{ConnectedComponents, CumVol, MinHashLSH, VectorOps}
@@ -20,12 +20,7 @@ import graft.ops.{ConnectedComponents, CumVol, MinHashLSH, VectorOps}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -738,30 +733,21 @@ object ScaleProbe {
           .sortWithinPartitions("id").select("value"),
         spoolDir, repartitionTo = None)
       val sinkRoot = work.resolve("sink").toString
-      val meters = graft.streaming.PipelineMeters.register(spark)
-      val saved = Seq("spark.graft.tick.watermark", "spark.graft.cumvol.tws",
-        "spark.sql.streaming.stateStore.providerClass")
-        .map(k => k -> spark.conf.getOption(k))
-      spark.conf.set("spark.graft.tick.watermark", "1 day")
-      spark.conf.set("spark.graft.cumvol.tws", "true")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // the watermark conf lives in a child session (isolated SQL conf,
+      // shared SparkContext), so the probe session is never modified
+      val ws = spark.newSession()
+      ws.conf.set("spark.graft.tick.watermark", "1 day")
+      val meters = graft.streaming.PipelineMeters.register(ws)
       try {
-        val env = spark.readStream
+        val env = ws.readStream
           .format(classOf[graft.source.EnvelopeSourceProvider].getName)
           .option("path", spool).option("maxFilesPerTrigger", "2").load()
         val qs = graft.streaming.Pipelines.start(env, "tick", sinkRoot,
           work.resolve("ckpt").toString)
         try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(ws)
         meters(s"graft_tick:$sinkRoot").onTime
-      } finally {
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        spark.streams.removeListener(meters)
-      }
+      } finally ws.streams.removeListener(meters)
     }
 
     // Item-item CF (rec_item_cf's pipeline): users ×c with fixed

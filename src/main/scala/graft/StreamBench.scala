@@ -109,18 +109,8 @@ object StreamBench {
     }
     def enabled(a: String): Boolean = armsFilter.forall(_(a))
     val fullRun = armsFilter.isEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // production state backend: RocksDB provider + the explicit graft
-      // opt-in for the transformWithState processor, so the measured
-      // path is the one a cluster runs
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.graft.cumvol.tws", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   *  - TIMESTAMP(NANOS): Spark 4 refuses to map it to TimestampType
   *    ([PARQUET_TYPE_ILLEGAL]); sessions set
-  *    `spark.sql.legacy.parquet.nanosAsLong=true` (every session
-  *    builder — Verify, Bench, ScaleProbe, SparkSpec — sets it),
+  *    `spark.sql.legacy.parquet.nanosAsLong=true` (the shared session
+  *    builder [[GraftSession]] sets it),
   *    the file arrives as `ts: LongType` epoch-nanos, and we truncate to
   *    micros with integer division (a double-precision divide would corrupt
   *    sub-ms digits — 1.7e18 exceeds a double's 53-bit mantissa).

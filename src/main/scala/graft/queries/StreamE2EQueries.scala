@@ -76,24 +76,6 @@ object StreamE2EQueries extends QueryPack {
       Seq(col("user_id"), col("time_s")),
       Seq(col("event_id")))
 
-  /** Run `body` with the RocksDB state-store provider set, restoring
-    * the previous conf after — transformWithState requires RocksDB, and
-    * scoping the set keeps the session default for every other runner
-    * (review finding: this save/set/restore scaffolding was copy-pasted
-    * at four runner sites).
-    */
-  private def withRocksDB[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** Name for a spool file appended AFTER the SpoolWriter-written data
     * files: same %010d width as the writer's sealed names (SpoolWriter's
     * contract — a narrower format can sort below the consumed watermark
@@ -215,24 +197,22 @@ object StreamE2EQueries extends QueryPack {
       .format(classOf[graft.source.EnvelopeSourceProvider].getName)
       .option("path", spool).load()
     val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .select(col("symbol"), col("bid"), col("price"), col("ask"),
-          col("time"), col("volume"), col("tradeType"))
-        .as[graft.model.Schemas.Tick]
-      // the batch family's deadline, not a copy (review finding: a
-      // FunnelW retune must move the streaming row with it)
-      val q = graft.streaming.FunnelProcessor
-        .stages(ticks, TemporalQueries.FunnelW)
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed",
-            "funnel", Seq("symbol"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("bid"), col("price"), col("ask"),
+        col("time"), col("volume"), col("tradeType"))
+      .as[graft.model.Schemas.Tick]
+    // the batch family's deadline, not a copy (review finding: a
+    // FunnelW retune must move the streaming row with it)
+    val q = graft.streaming.FunnelProcessor
+      .stages(ticks, TemporalQueries.FunnelW)
+      .toDF()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed",
+          "funnel", Seq("symbol"))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
     LwwSink.read(s, sinkRoot, "feed", "funnel")
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
   }
@@ -266,25 +246,23 @@ object StreamE2EQueries extends QueryPack {
       .format(classOf[graft.source.EnvelopeSourceProvider].getName)
       .option("path", spool).load()
     val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val evs = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .select(col("symbol"), col("time"),
-          when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
-          col("price"), col("tradeType"))
-        .as[graft.streaming.AsofEnrichProcessor.MarketEv]
-      val q = evs.groupByKey(_.symbol)
-        .transformWithState(new graft.streaming.AsofEnrichProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "asof",
-            Seq("symbol", "time"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val evs = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("time"),
+        when(col("tradeType") === "Q", 0).otherwise(1).as("kind"),
+        col("price"), col("tradeType"))
+      .as[graft.streaming.AsofEnrichProcessor.MarketEv]
+    val q = evs.groupByKey(_.symbol)
+      .transformWithState(new graft.streaming.AsofEnrichProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      .toDF()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "asof",
+          Seq("symbol", "time"))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
     LwwSink.read(s, sinkRoot, "feed", "asof")
       .select(col("symbol"), col("time").as("time_s"), col("price"),
         col("tradeType").as("trade_type"),
@@ -573,9 +551,9 @@ object StreamE2EQueries extends QueryPack {
     *     alone to advance the one-batch-lagging filter watermark —
     *     see runLateCommon's scaladoc for why one is not enough;
     *   - incarnation 2, restarted from the checkpoint, receives ONE
-    *     straggler per purchase USER (one row per flatMapGroupsWith-
-    *     State group, so the drop count is exact under either row- or
-    *     group-granular metering), ~100 days behind the recovered
+    *     straggler per purchase USER (one row per stateful-operator
+    *     key, so the drop count is exact under either row- or
+    *     key-granular metering), ~100 days behind the recovered
     *     watermark — every one must be dropped AND metered.
     * The meter must read rows = era + corrupt + 2 + stragglers,
     * corrupt = purchase rows, dropped_late = purchase users, on_time
@@ -636,12 +614,14 @@ object StreamE2EQueries extends QueryPack {
         col("value"), (floor(col("value")) * 10 + 7).cast("int"), lit("B")),
       work.resolve("late"), repartitionTo = Some(1))
     val sinkRoot = work.resolve("sink").toString
-    val meters = graft.streaming.PipelineMeters.register(s)
-    val savedWm = s.conf.getOption("spark.graft.tick.watermark")
-    s.conf.set("spark.graft.tick.watermark", "1 day")
+    // the watermark conf lives in a child session (isolated SQL conf,
+    // shared SparkContext), so the caller's session is never modified
+    val ws = s.newSession()
+    ws.conf.set("spark.graft.tick.watermark", "1 day")
+    val meters = graft.streaming.PipelineMeters.register(ws)
     try {
       def run(): Unit = {
-        val env = s.readStream
+        val env = ws.readStream
           .format(classOf[graft.source.EnvelopeSourceProvider].getName)
           .option("path", spool)
           .option("maxFilesPerTrigger", "1") // advancers commit alone
@@ -649,7 +629,7 @@ object StreamE2EQueries extends QueryPack {
         val qs = Pipelines.start(env, "tick", sinkRoot,
           work.resolve("ckpt").toString)
         try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(s)
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(ws)
       }
       run() // incarnation 1: era + corrupt + both advancers
       moveIn(lateSpool, next)
@@ -657,13 +637,7 @@ object StreamE2EQueries extends QueryPack {
       val m = meters(s"graft_tick:$sinkRoot")
       Seq((m.rows, m.corrupt, m.droppedLate, m.onTime))
         .toDF("n_rows", "n_corrupt", "n_dropped_late", "n_on_time")
-    } finally {
-      savedWm match {
-        case Some(v) => s.conf.set("spark.graft.tick.watermark", v)
-        case None => s.conf.unset("spark.graft.tick.watermark")
-      }
-      s.streams.removeListener(meters)
-    }
+    } finally ws.streams.removeListener(meters)
   }
 
   private def runTumbling(s: SparkSession, dir: String): DataFrame = {
@@ -733,23 +707,21 @@ object StreamE2EQueries extends QueryPack {
       .option("maxFilesPerTrigger", "2") // several update emissions
       .load()
     val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
-        .select(col("symbol"), col("time"), col("price"))
-        .as[graft.streaming.TopKProcessor.TickIn]
-      val q = ticks.groupByKey(_.symbol)
-        .transformWithState(new graft.streaming.TopKProcessor(5),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "topk",
-            Seq("symbol", "rank"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val ticks = Pipelines.parseTicks(env).filter(!col("_corrupt"))
+      .select(col("symbol"), col("time"), col("price"))
+      .as[graft.streaming.TopKProcessor.TickIn]
+    val q = ticks.groupByKey(_.symbol)
+      .transformWithState(new graft.streaming.TopKProcessor(5),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF()
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "feed", "topk",
+          Seq("symbol", "rank"))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
     LwwSink.read(s, sinkRoot, "feed", "topk")
       .select(col("symbol"), col("rank"), col("price"),
         col("time").as("time_s"))
@@ -1016,38 +988,34 @@ object StreamE2EQueries extends QueryPack {
       .format(classOf[graft.source.EnvelopeSourceProvider].getName)
       .option("path", spool).load()
     val sinkRoot = work.resolve("sink").toString
-    // transformWithState requires the RocksDB state store; scope the
-    // provider to this run like StreamingRollingStatsSuite does
-    withRocksDB(s) {
-      val evs = Pipelines.parseTicks(env)
-        .filter(!col("_corrupt"))
-        .select(
-          col("symbol").cast("long").as("userId"),
-          // the deduped (symbol, second) PK makes `time` the row id
-          col("time").as("eventId"),
-          (col("time") * 1000000L).as("tsUs"),
-          col("price").as("value"),
-          floor(col("price") * 1e9).cast("long").as("q"),
-          floor(col("price") * col("price") * 1e9).cast("long").as("q2"))
-        .as[graft.streaming.RollingStatsProcessor.Ev]
-      val q = evs.groupByKey(_.userId)
-        .transformWithState(new graft.streaming.RollingStatsProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(
-            batch.select(
-              col("userId").cast("string").as("symbol"),
-              col("eventId").as("time"),
-              col("nFrame").as("n_frame"),
-              col("value"), col("mean")).toDF(),
-            id, sinkRoot, "feed", "roll", Seq("symbol", "time"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val evs = Pipelines.parseTicks(env)
+      .filter(!col("_corrupt"))
+      .select(
+        col("symbol").cast("long").as("userId"),
+        // the deduped (symbol, second) PK makes `time` the row id
+        col("time").as("eventId"),
+        (col("time") * 1000000L).as("tsUs"),
+        col("price").as("value"),
+        floor(col("price") * 1e9).cast("long").as("q"),
+        floor(col("price") * col("price") * 1e9).cast("long").as("q2"))
+      .as[graft.streaming.RollingStatsProcessor.Ev]
+    val q = evs.groupByKey(_.userId)
+      .transformWithState(new graft.streaming.RollingStatsProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      .toDF()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        LwwSink.upsertBatch(
+          batch.select(
+            col("userId").cast("string").as("symbol"),
+            col("eventId").as("time"),
+            col("nFrame").as("n_frame"),
+            col("value"), col("mean")).toDF(),
+          id, sinkRoot, "feed", "roll", Seq("symbol", "time"))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
     LwwSink.read(s, sinkRoot, "feed", "roll")
       .select(col("symbol"), col("time").as("time_s"),
         col("n_frame"), col("value"), col("mean"))
@@ -1195,20 +1163,18 @@ object StreamE2EQueries extends QueryPack {
       .load()
     val hits = graft.streaming.LshBucketProcessor.bandHits(env)
     val sinkRoot = work.resolve("sink").toString
-    withRocksDB(s) {
-      val q = hits.groupByKey(_.bucket)
-        .transformWithState(new graft.streaming.LshBucketProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF()
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "docs",
-            "neardup", Seq("doc_a", "doc_b"))
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val q = hits.groupByKey(_.bucket)
+      .transformWithState(new graft.streaming.LshBucketProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF()
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        LwwSink.upsertBatch(batch.toDF(), id, sinkRoot, "docs",
+          "neardup", Seq("doc_a", "doc_b"))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
     LwwSink.read(s, sinkRoot, "docs", "neardup")
       .select(col("doc_a"), col("doc_b"))
   }

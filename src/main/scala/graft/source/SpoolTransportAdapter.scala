@@ -25,6 +25,15 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 object MultipartFrames {
   private val MORE: Int = 0x1
 
+  /** Largest frame body accepted off the wire (16 MiB). A real TICK is a
+    * ~100-byte JSON object and a BOOK a ladder of such levels — a few KB.
+    * The length is read from the socket before the body is allocated, so
+    * without a cap one corrupt header asks for up to 2 GiB: an
+    * OutOfMemoryError, or a `readFully` that blocks on bytes that never
+    * come.
+    */
+  val MaxFrameBytes: Int = 16 << 20
+
   /** Read one whole multipart message; None at clean EOF. A truncated
     * message (EOF mid-frame) also yields None — transport tear-down, not
     * data, so there is nothing to dead-letter.
@@ -37,7 +46,8 @@ object MultipartFrames {
         val flags = in.read()
         if (flags < 0) return None // clean EOF only before frame 0
         val len = in.readInt()
-        if (len < 0) return None   // corrupt length: stop the pump
+        // corrupt length: stop the pump
+        if (len < 0 || len > MaxFrameBytes) return None
         val body = new Array[Byte](len)
         in.readFully(body)
         frames += body

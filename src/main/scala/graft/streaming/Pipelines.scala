@@ -85,8 +85,11 @@ object Pipelines {
         col("_t.type").as("tradeType"))
 
   /** Full tick branch: parse → drop corrupt (to dead-letter elsewhere) →
-    * stateful enrichment (A1+A2+F6). The parse stage is `observe`d:
-    * per-micro-batch row/corrupt counts surface in every
+    * stateful enrichment (A1+A2+F6) on [[CumVolStatefulProcessor]]
+    * (`transformWithState`, RocksDB state store — the session must carry
+    * the provider [[graft.GraftSession]] sets; the enrichment entry fails
+    * fast without it). The parse stage is `observe`d: per-micro-batch
+    * row/corrupt counts surface in every
     * `StreamingQueryProgress.observedMetrics` — the monitoring signal
     * the reference's log-line-per-error (main.rs:224-229) cannot
     * aggregate.
@@ -100,42 +103,21 @@ object Pipelines {
       .filter(!col("_corrupt"))
       .select("symbol", "bid", "price", "ask", "time", "volume", "tradeType")
       .as[Schemas.Tick]
-    // Same semantics, two state backends (equivalence is suite-tested),
-    // chosen by an EXPLICIT graft conf — never inferred from the state
-    // store provider, which is a tuning knob fully compatible with
-    // either operator: inferring would silently swap the stateful
-    // operator under an existing checkpoint (state-format mismatch →
-    // unrecoverable restart) when ops changes the provider.
-    val useTws = env.sparkSession.conf
-      .getOption("spark.graft.cumvol.tws").exists(_.toBoolean)
-    if (useTws) {
-      val provider = env.sparkSession.conf
-        .getOption("spark.sql.streaming.stateStore.providerClass")
-        .getOrElse("")
-      require(provider ==
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        s"spark.graft.cumvol.tws requires the RocksDB state store provider, got '$provider'")
-      tickWatermark(env) match {
-        case Some(d) =>
-          CumVolStatefulProcessor.enrichWithWatermark(ticks.toDF(), d)
-        case None => CumVolStatefulProcessor.enrich(ticks)
-      }
-    } else tickWatermark(env) match {
-      case Some(d) => CumVolProcessor.enrichWithWatermark(ticks.toDF(), d)
-      case None => CumVolProcessor.enrich(ticks)
+    tickWatermark(env) match {
+      case Some(d) => CumVolStatefulProcessor.enrichWithWatermark(ticks.toDF(), d)
+      case None => CumVolStatefulProcessor.enrich(ticks)
     }
   }
 
   /** Optional tick-branch watermark (round-13): `spark.graft.tick
     * .watermark = "<delay>"` (e.g. "1 day") routes enrichment through
-    * the watermarked variants — event-time state expiry at scale, and
+    * the watermarked entry — event-time state expiry at scale, and
     * late rows DROPPED (and metered: [[PipelineMeters]] surfaces the
     * engine's `numRowsDroppedByWatermark` as a per-pipeline
     * `dropped_late` counter) instead of re-seeding stale per-day
     * state. Unset keeps the reference-parity unbounded behavior. An
-    * EXPLICIT conf, same rationale as `spark.graft.cumvol.tws`:
-    * flipping it under an existing checkpoint changes the stateful
-    * operator layout, so it must never be inferred.
+    * EXPLICIT conf: flipping it under an existing checkpoint changes
+    * the stateful operator's time mode, so it must never be inferred.
     */
   private def tickWatermark(env: DataFrame): Option[String] =
     env.sparkSession.conf.getOption("spark.graft.tick.watermark")

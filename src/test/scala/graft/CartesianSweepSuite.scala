@@ -25,13 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CartesianSweepSuite extends AnyFunSuite {
 
   test("no registered query plans a CartesianProduct") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder("4").getOrCreate()
     GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val offenders = SparkEntry.queries.toSeq

@@ -171,6 +171,18 @@ class EnvelopeSourceSuite extends SparkSpec {
     assert(corrupt.contains(""""half a strin"""))
   }
 
+  test("an oversized frame length ends the read without allocating it") {
+    import graft.source.MultipartFrames
+    val buf = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(buf)
+    out.writeByte(0)
+    out.writeInt(Int.MaxValue) // corrupt header, then EOF
+    out.flush()
+    val in = new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(buf.toByteArray))
+    assert(MultipartFrames.readMessage(in) === None)
+  }
+
   test("adapter restart resumes the file sequence past sealed files") {
     import java.nio.charset.StandardCharsets.UTF_8
     import graft.source.{MultipartFrames, SpoolTransportAdapter}

@@ -74,12 +74,6 @@ class StreamingFunnelSuite extends SparkSpec {
     val sink = Files.createTempDirectory("funnel_sink").toString
     val ckpt = Files.createTempDirectory("funnel_ckpt").toString
 
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-
     def run(): Unit = {
       import spark.implicits._
       val env = spark.readStream.format(fmt)
@@ -109,15 +103,10 @@ class StreamingFunnelSuite extends SparkSpec {
       line("click", t0 + 50), line("purchase", t0 + 120))
     run()
 
-    try {
-      val rows = LwwSink.read(spark, sink, "feed", "funnel")
-        .select("symbol", "stage").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(rows === Set(("u1", 3L)),
-        s"restored anchor must complete the chain: $rows")
-    } finally savedProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    val rows = LwwSink.read(spark, sink, "feed", "funnel")
+      .select("symbol", "stage").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(rows === Set(("u1", 3L)),
+      s"restored anchor must complete the chain: $rows")
   }
 }

@@ -25,7 +25,6 @@ class StreamingNearDupTtlSuite extends SparkSpec {
   import spark.implicits._
 
   private val fmt = classOf[EnvelopeSourceProvider].getName
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
 
   private def docLine(id: Long, text: String) =
     s"""{"topic": "docs", "frameType": "DOC", "payload": {"doc_id": $id, "text": "$text"}}"""
@@ -40,10 +39,6 @@ class StreamingNearDupTtlSuite extends SparkSpec {
     val ckpt = Files.createTempDirectory("ndttl_ckpt").toString
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val ttl = TTLConfig(java.time.Duration.ofSeconds(4))
-
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     // one incarnation per call — every boundary below is also a
     // checkpointed restart, the suite family's discipline.
@@ -76,29 +71,24 @@ class StreamingNearDupTtlSuite extends SparkSpec {
     }
 
     val dup = "alpha beta gamma delta epsilon zeta"
-    try {
-      write(spool, "000.jsonl", docLine(1L, dup))
-      run()
-      assert(emitted.isEmpty, "a lone member emits nothing")
+    write(spool, "000.jsonl", docLine(1L, dup))
+    run()
+    assert(emitted.isEmpty, "a lone member emits nothing")
 
-      // idle past the TTL, THEN restart: doc 1's membership must be
-      // expired when the new incarnation reads the bucket
-      Thread.sleep(6000)
-      write(spool, "001.jsonl", docLine(2L, dup))
-      run()
-      import scala.jdk.CollectionConverters._
-      assert(emitted.asScala.toSet === Set.empty,
-        s"doc 1 expired ${emitted.asScala.toSeq}")
+    // idle past the TTL, THEN restart: doc 1's membership must be
+    // expired when the new incarnation reads the bucket
+    Thread.sleep(6000)
+    write(spool, "001.jsonl", docLine(2L, dup))
+    run()
+    import scala.jdk.CollectionConverters._
+    assert(emitted.asScala.toSet === Set.empty,
+      s"doc 1 expired ${emitted.asScala.toSeq}")
 
-      // doc 2 was appended seconds ago — inside the window, so a new
-      // arrival must still pair against it (eviction must not over-fire)
-      write(spool, "002.jsonl", docLine(4L, dup))
-      run()
-      assert(emitted.asScala.toSet === Set((2L, 4L)),
-        s"in-window member must pair: ${emitted.asScala.toSeq}")
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
+    // doc 2 was appended seconds ago — inside the window, so a new
+    // arrival must still pair against it (eviction must not over-fire)
+    write(spool, "002.jsonl", docLine(4L, dup))
+    run()
+    assert(emitted.asScala.toSet === Set((2L, 4L)),
+      s"in-window member must pair: ${emitted.asScala.toSeq}")
   }
 }
